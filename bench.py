@@ -2,7 +2,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
-"sf": ...}.
+"sf": ...}. $SPARK_GRAFT_CPUS defaults to the host's core count.
 
 Noise discipline (VERDICT r04 #2): this box's memory bus is shared and
 externally loaded — identical code has benched 48-103s across rounds. So
@@ -86,7 +86,7 @@ def main() -> None:
     probe_start = membw_probe()
 
     from wikidata_wikifier_spark.queries import QUERIES
-    from wikidata_wikifier_spark.session import get_spark
+    from wikidata_wikifier_spark.session import default_parallelism, get_spark
 
     names = args.queries or (sorted(QUERIES.keys()) if args.all else HEADLINE)
     names = [n for n in names if n in QUERIES]
@@ -127,7 +127,7 @@ def main() -> None:
         "runs": max(args.runs, 1),
         "value_run1": round(total_run1, 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": default_parallelism(),
         "rows_out": rows_out,
     }
     if "triples_emit" in timings and timings["triples_emit"] > 0:

@@ -14,7 +14,16 @@ import os
 import subprocess
 import sys
 
+from wikidata_wikifier_spark.session import default_parallelism
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_default_parallelism_falls_back_to_host_cores(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
 
 
 def test_bench_cli_json_contract():
@@ -34,6 +43,7 @@ def test_bench_cli_json_contract():
     assert out["unit"] == "sec"
     assert out["sf"] == 0.001
     assert out["runs"] == 2
+    assert out["cpus"] == 4
     assert set(out["queries"]) == {"dedup_exact", "events_sessionize"}
     # per-query median lies inside its own [min, max] spread
     for q, med in out["queries"].items():

@@ -249,21 +249,24 @@ def wikify(
     )
 
 
-def canonicalize_links(
-    links: DataFrame, alias_edges: DataFrame, comp_rows: int | None = None
-) -> DataFrame:
+def canonicalize_links(links: DataFrame, alias_edges: DataFrame) -> DataFrame:
     """Connected components over sameAs edges → rewrite each linked qnode
     to its component representative (north_rule canonicalization).
 
     The component map is NODE-scale (the sameAs graph can approach index
-    scale), so the join is size-aware: hintless → shuffle join with AQE
-    promotion, never a forced driver broadcast of an index-sized map."""
+    scale), so the join is size-aware: a map solved on the driver carries
+    its exact node count as the hint; a round-solved one is hintless →
+    shuffle join with AQE promotion, never a forced driver broadcast of an
+    index-sized map."""
     from .plans.skew import size_aware_broadcast
 
-    comp = connected_components(alias_edges)
+    cc_stats: dict = {}
+    comp = connected_components(alias_edges, stats=cc_stats)
     return (
         links.join(
-            size_aware_broadcast(comp.withColumnRenamed("node", "qnode"), comp_rows),
+            size_aware_broadcast(
+                comp.withColumnRenamed("node", "qnode"), cc_stats.get("n_nodes")
+            ),
             "qnode",
             "left",
         )

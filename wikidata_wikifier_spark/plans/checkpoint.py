@@ -5,8 +5,7 @@ resume (north_rule: "resumable from checkpoint with per-partition lineage
 Layout under `out_dir`:
     triples/part=<p>/*.parquet      the graph table, partitioned
     _manifest/*.parquet             one row per COMPLETED partition:
-                                    (part, n_triples, triples_digest,
-                                     input_digest, written_at_ordinal)
+                                    (part, n_triples, triples_digest)
 
 Resume contract: a partition is the unit of recovery. On restart,
 completed partitions (present in the manifest) are skipped via an
